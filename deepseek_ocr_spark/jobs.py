@@ -8,13 +8,21 @@ lineage. Entry points are also exposed as a CLI:
 
     spark-submit --py-files dist/deepseek_ocr_spark.zip run_extract.py \
         --input /data/documents --output /out --job spans [--resume]
+
+The composed jobs (curate, trainprep, cluster) are stage lists run by
+``_run_stages``: each stage's output is materialised by ONE Spark job
+(a ``localCheckpoint``, or the stage's parquet write), and the stage's
+row counts and sums ride along on that same job as an ``observe`` at
+the top of its plan — no separate counting pass, no per-stage timer
+code in the jobs themselves.
 """
 
 from __future__ import annotations
 
+import time
 import warnings
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.extraction import extract_pdf
@@ -22,6 +30,49 @@ from .operators.spans_pipeline import extract_spans
 from .plans.coalesce import doc_cost, repartition_by_cost
 from .plans.lineage import fresh_read_error, run_extract_resumable
 from .sources.sinks import write_markdown_table
+
+_NO_CLUSTERS = dict.fromkeys(
+    ("edges", "docs_clustered", "clusters", "max_cluster_size"), 0
+)
+
+
+def _rows(alias: str) -> Column:
+    return F.count("*").alias(alias)
+
+
+def _total(col: Column, alias: str) -> Column:
+    # a sum over an empty stage reads 0, not NULL
+    return F.coalesce(F.sum(col), F.lit(0)).cast("long").alias(alias)
+
+
+def _n_tokens() -> Column:
+    return F.size(F.split(F.col("text"), r"\s+")).cast("long")
+
+
+def _run_stages(df: DataFrame, stages: list[tuple]) -> tuple[DataFrame, dict]:
+    """Run ``(name, fn, metrics, sink)`` stages in order; returns the last
+    checkpointed frame and the merged stats. Each stage is ONE Spark job:
+    ``fn(df)`` topped by ``observe(metrics)`` — the top node, so a
+    retried task's update counts once — then ``localCheckpoint``ed to
+    feed the next stage, or written to the parquet path ``sink`` (the
+    next stage then sees the same input). Same-named stages add up into
+    one ``sec_<name>``. Observations are fresh and unnamed (a session may
+    run a job many times); no job group or description is set."""
+    stats: dict = {}
+    for name, fn, metrics, sink in stages:
+        t0 = time.perf_counter()
+        out, obs = fn(df), Observation()
+        if metrics:
+            out = out.observe(obs, *metrics)
+        if sink is None:
+            df = out.localCheckpoint()
+        else:
+            out.write.mode("overwrite").parquet(sink)
+        if metrics:
+            stats.update(obs.get)
+        key = f"sec_{name}"
+        stats[key] = round(stats.get(key, 0.0) + time.perf_counter() - t0, 3)
+    return df, stats
 
 
 def run_spans_job(
@@ -298,8 +349,8 @@ def run_cluster_job(spark: SparkSession, store_dir: str) -> dict:
     cluster_size, is_canonical) — a derived snapshot, overwritten each
     run. ``is_canonical`` is min-id within the cluster, a *view-level*
     tag: store acceptance stays first-come (the signature table is
-    untouched). Rule-17 safe: the cluster rows are localCheckpoint'ed
-    inside dup_clusters before this job writes to a DIFFERENT path."""
+    untouched). Rule-17 safe: the plan reads only the dup log, and the
+    snapshot is written to a DIFFERENT path."""
     from pyspark.errors import AnalysisException
 
     from .operators.dedup import cluster_sizes, dup_clusters
@@ -312,33 +363,25 @@ def run_cluster_job(spark: SparkSession, store_dir: str) -> dict:
         # shared fresh-vs-corrupt line with the dedup store reads: a
         # missing OR never-committed dup log means nothing to cluster
         if fresh_read_error(e):
-            return {
-                "edges": 0,
-                "docs_clustered": 0,
-                "clusters": 0,
-                "max_cluster_size": 0,
-            }
+            return dict(_NO_CLUSTERS)
         raise
-    edges = dups.select("doc_id", "dup_of").distinct().persist()
-    try:
-        n_edges = edges.count()
-        cl = dup_clusters(edges, a_col="doc_id", b_col="dup_of")
-        out = cluster_sizes(cl).localCheckpoint()
-        out.write.mode("overwrite").parquet(clusters_path)
-        spark.catalog.refreshByPath(clusters_path)
-        stats = out.agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct("cluster_id").alias("n_clusters"),
-            F.max("cluster_size").alias("max_size"),
-        ).collect()[0]
-        return {
-            "edges": n_edges,
-            "docs_clustered": stats["n_docs"],
-            "clusters": stats["n_clusters"],
-            "max_cluster_size": stats["max_size"],
-        }
-    finally:
-        edges.unpersist()
+    # edges are checkpointed: the closure's iterations re-read them
+    _, stats = _run_stages(
+        dups,
+        [
+            ("edges", lambda d: d.select("doc_id", "dup_of").distinct(),
+             [_rows("edges")], None),
+            ("clusters",
+             lambda e: cluster_sizes(dup_clusters(e, "doc_id", "dup_of")),
+             [_rows("docs_clustered"),
+              F.count_if("is_canonical").alias("clusters"),
+              F.coalesce(F.max("cluster_size"), F.lit(0))
+              .alias("max_cluster_size")],
+             clusters_path),
+        ],
+    )
+    spark.catalog.refreshByPath(clusters_path)
+    return {k: stats[k] for k in _NO_CLUSTERS}
 
 
 def run_curation_job(
@@ -357,21 +400,21 @@ def run_curation_job(
     cluster collapse (one canonical per cluster) → cross-document
     exact-substring suppression → (optional) benchmark decontamination
     → curated parquet + per-stage counts. Every stage is an audited
-    operator elsewhere in this package; this function is the wiring and
-    the bookkeeping.
+    operator elsewhere in this package; this function is the wiring, a
+    stage list for ``_run_stages``: ``docs_in`` is counted on the
+    row-preserving redaction, ``after_*`` on each gate and ``docs_out``
+    / ``tokens_out`` on the corpus write, each by the job it rides on.
 
     Scale notes: stages are narrow maps except the dedup pair shuffle,
     the cluster closure (verified-pair-sized), and the substring
     hash groupBy — each documented at its operator. Stage boundaries
-    localCheckpoint so counts don't re-run upstream stages and lineage
-    stays shallow (rule-17 discipline: all reads precede the write).
+    are checkpoints, so lineage stays shallow and the write reads only
+    materialised rows (rule-17 discipline: all reads precede the write).
     Expected input columns: (doc_id, text). ``keep_cols`` names extra
     metadata columns (e.g. the domain column run_training_prep_job
     mixes on) carried through every stage into {out}/corpus — every
     stage operator preserves non-(id, text) columns, so passthrough is
     just selecting them."""
-    import time as _time
-
     from .operators.dedup import collapse_duplicates, minhash_lsh_pairs
     from .operators.quality import redact_pii, repetition_signals
     from .operators.substring_dedup import (
@@ -379,73 +422,50 @@ def run_curation_job(
         suppress_duplicate_substrings,
     )
 
-    stats: dict = {}
-    docs = spark.read.parquet(input_path).select(
-        "doc_id", "text", *keep_cols
-    )
-    stats["docs_in"] = docs.count()
+    cols = ("doc_id", "text", *keep_cols)
 
-    # per-stage wall seconds: each stage ends at its localCheckpoint +
-    # count, so the stamps bracket real materialized work (BENCH.md
-    # reports these as the curation job's stage breakdown)
-    t0 = _time.time()
-
-    # 1. PII redaction (pure codegen map — no shuffle). Checkpointed
-    #    HERE because the repetition gate below is a self-join on this
-    #    lineage: both the signal branch and the kept-rows branch would
-    #    otherwise re-run the whole regex chain over the corpus text
-    #    (Catalyst does not dedupe common subplans across join inputs —
-    #    the u4 lesson, regex edition)
-    docs = redact_pii(docs).localCheckpoint()
-
-    # 2. repetition gate (Gopher thresholds)
-    rep = repetition_signals(docs).select("doc_id", "gopher_repetition_ok")
-    docs = (
-        docs.join(rep, on="doc_id", how="left")
-        .filter(F.coalesce(F.col("gopher_repetition_ok"), F.lit(True)))
-        .drop("gopher_repetition_ok")
-        .localCheckpoint()
-    )
-    stats["after_repetition_gate"] = docs.count()
-    stats["sec_redact_repetition"] = round(_time.time() - t0, 3)
-    t0 = _time.time()
-
-    # 3. near-dup pairs → transitive clusters → canonical survivors
-    pairs = minhash_lsh_pairs(docs, jaccard_threshold=jaccard_threshold)
-    docs = (
-        collapse_duplicates(docs, pairs)
-        .filter(F.col("kept"))
-        .select("doc_id", "text", *keep_cols)
-        .localCheckpoint()
-    )
-    stats["after_dedup"] = docs.count()
-    stats["sec_dedup_collapse"] = round(_time.time() - t0, 3)
-    t0 = _time.time()
-
-    # 4. cross-doc duplicated-passage excision (keep-first)
-    docs = suppress_duplicate_substrings(docs, n=substring_n).localCheckpoint()
-    stats["sec_substring_excision"] = round(_time.time() - t0, 3)
-    t0 = _time.time()
-
-    # 5. benchmark decontamination (whole-doc drop, published default)
-    if benchmark_path is not None:
-        bench = spark.read.parquet(benchmark_path).select("text")
-        docs = (
-            decontaminate(docs, bench, n=decontam_n)
-            .filter(~F.col("contaminated"))
-            .select("doc_id", "text", *keep_cols)
-            .localCheckpoint()
+    def repetition_gate(docs: DataFrame) -> DataFrame:
+        # a self-join on the redacted rows: checkpointing them first (the
+        # stage before) keeps both join branches from re-running the
+        # whole regex chain (Catalyst does not dedupe common subplans
+        # across join inputs — the u4 lesson, regex edition)
+        rep = repetition_signals(docs).select("doc_id", "gopher_repetition_ok")
+        return (
+            docs.join(rep, on="doc_id", how="left")
+            .filter(F.coalesce(F.col("gopher_repetition_ok"), F.lit(True)))
+            .drop("gopher_repetition_ok")
         )
-        stats["after_decontamination"] = docs.count()
-        stats["sec_decontamination"] = round(_time.time() - t0, 3)
-        t0 = _time.time()
 
-    docs.write.mode("overwrite").parquet(f"{output_dir}/corpus")
-    stats["docs_out"] = docs.count()
-    stats["tokens_out"] = docs.select(
-        F.sum(F.size(F.split(F.col("text"), r"\s+"))).alias("t")
-    ).collect()[0]["t"]
-    stats["sec_write"] = round(_time.time() - t0, 3)
+    def dedup_collapse(docs: DataFrame) -> DataFrame:
+        # near-dup pairs → transitive clusters → canonical survivors
+        pairs = minhash_lsh_pairs(docs, jaccard_threshold=jaccard_threshold)
+        return collapse_duplicates(docs, pairs).filter(F.col("kept")).select(*cols)
+
+    stages = [
+        ("redact_repetition", redact_pii, [_rows("docs_in")], None),
+        ("redact_repetition", repetition_gate,
+         [_rows("after_repetition_gate")], None),
+        ("dedup_collapse", dedup_collapse, [_rows("after_dedup")], None),
+        # cross-doc duplicated-passage excision (keep-first)
+        ("substring_excision",
+         lambda d: suppress_duplicate_substrings(d, n=substring_n), [], None),
+    ]
+    if benchmark_path is not None:
+        # benchmark decontamination (whole-doc drop, published default)
+        bench = spark.read.parquet(benchmark_path).select("text")
+        stages.append((
+            "decontamination",
+            lambda d: decontaminate(d, bench, n=decontam_n)
+            .filter(~F.col("contaminated")).select(*cols),
+            [_rows("after_decontamination")],
+            None,
+        ))
+    stages.append((
+        "write", lambda d: d,
+        [_rows("docs_out"), _total(_n_tokens(), "tokens_out")],
+        f"{output_dir}/corpus",
+    ))
+    _, stats = _run_stages(spark.read.parquet(input_path).select(*cols), stages)
     return stats
 
 
@@ -466,84 +486,74 @@ def run_training_prep_job(
     train split (alpha-sampling; rates > 1 upsample low-resource
     domains as extra epochs); (3) count tokens and pack into
     fixed-budget training sequences. Writes {out}/holdout, {out}/mixed,
-    {out}/packs; returns per-stage counts + seconds.
+    {out}/packs; returns per-stage counts + seconds. The stages run
+    through ``_run_stages``: the split, the mix (which also sums the
+    tokens that size the pack shards) and the packing each count on the
+    job that checkpoints them; the outputs are written from those.
 
     Every sampling decision is deterministic in the data
     (operators/mixing.py) — a retried task, a re-run job, or another
     engine reproduces the identical corpus. Scale shape: two narrow
     map/filter stages + one bounded domain count + packing's single
-    exchange; rule-17 discipline (localCheckpoint before writes).
+    exchange; rule-17 discipline (checkpoints before writes).
     Expected input columns: (doc_id, text, <domain_col>)."""
-    import time as _time
-
     from .operators.mixing import holdout_split, mix_corpus
     from .operators.packing import adaptive_shards, pack_sequences
 
-    stats: dict = {}
-    docs = spark.read.parquet(input_path).select(
-        "doc_id", "text", domain_col
-    )
-    stats["docs_in"] = docs.count()
-    t0 = _time.time()
+    docs = spark.read.parquet(input_path).select("doc_id", "text", domain_col)
+    is_holdout, is_train = F.col("split") == "holdout", F.col("split") == "train"
+    tagged, stats = _run_stages(docs, [(
+        "holdout_split", lambda d: holdout_split(d, holdout_frac),
+        [_rows("docs_in"), F.count_if(is_holdout).alias("holdout_docs"),
+         F.count_if(is_train).alias("train_docs")],
+        None,
+    )])
+    holdout = tagged.filter(is_holdout).drop("split")
+    mixed, more = _run_stages(tagged, [(
+        "mix",
+        lambda t: mix_corpus(
+            t.filter(is_train).drop("split"),
+            domain_col=domain_col, alpha=alpha, budget=budget_docs,
+        ),
+        [_rows("mixed_docs"), _total(_n_tokens(), "mixed_tokens")],
+        None,
+    )])
+    stats.update(more)
+    # size the shard count to the corpus: each shard's last pack is
+    # partially filled, so a small corpus at the full 256 shards packs
+    # near-empty (utilization 0.06 at 25k tokens); big corpora still
+    # cap at 256
+    stats["pack_shards"] = adaptive_shards(stats.pop("mixed_tokens"), seq_budget)
 
-    tagged = holdout_split(docs, holdout_frac).localCheckpoint()
-    holdout = tagged.filter(F.col("split") == "holdout").drop("split")
-    train = tagged.filter(F.col("split") == "train").drop("split")
-    stats["holdout_docs"] = holdout.count()
-    stats["train_docs"] = train.count()
-    stats["sec_holdout_split"] = round(_time.time() - t0, 3)
-    t0 = _time.time()
+    def pack(m: DataFrame) -> DataFrame:
+        # epochs are distinct rows of the same doc: pack on a per-copy
+        # key so the fill window orders deterministically (doc_id alone
+        # ties)
+        counted = m.select(
+            F.concat_ws(
+                "#", F.col("doc_id").cast("string"), F.col("epoch").cast("string")
+            ).alias("pack_key"),
+            _n_tokens().alias("n_tokens"),
+        )
+        return pack_sequences(
+            counted, budget=seq_budget, count_col="n_tokens",
+            id_col="pack_key", n_shards=stats["pack_shards"],
+        )
 
-    mixed = mix_corpus(
-        train, domain_col=domain_col, alpha=alpha, budget=budget_docs
-    ).localCheckpoint()
-    stats["mixed_docs"] = mixed.count()
-    stats["sec_mix"] = round(_time.time() - t0, 3)
-    t0 = _time.time()
-
-    # epochs are distinct rows of the same doc: pack on a per-copy key
-    # so the fill window orders deterministically (doc_id alone ties)
-    counted = mixed.select(
-        F.concat_ws(
-            "#", F.col("doc_id").cast("string"), F.col("epoch").cast("string")
-        ).alias("pack_key"),
-        F.size(F.split(F.col("text"), r"\s+")).cast("long").alias("n_tokens"),
-    ).localCheckpoint()
-    # size the shard count to the corpus (one cheap agg over the
-    # checkpointed counts): each shard's last pack is partially filled,
-    # so a small corpus at the full 256 shards packs near-empty
-    # (utilization 0.06 at 25k tokens); big corpora still cap at 256
-    total_tokens = counted.agg(F.sum("n_tokens")).collect()[0][0] or 0
-    n_shards = adaptive_shards(total_tokens, seq_budget)
-    stats["pack_shards"] = n_shards
-    packs = pack_sequences(
-        counted,
-        budget=seq_budget,
-        count_col="n_tokens",
-        id_col="pack_key",
-        n_shards=n_shards,
-    ).localCheckpoint()
-    agg = packs.agg(
-        F.count("*").alias("packs"),
-        F.sum("total_tokens").alias("tokens_packed"),
-        F.round(
-            F.avg(F.when(~F.col("oversize"), F.col("utilization"))), 6
-        ).alias("mean_utilization"),
-        F.sum(F.col("oversize").cast("int")).alias("oversize_packs"),
-    ).collect()[0]
-    stats.update(
-        packs=agg["packs"],
-        tokens_packed=agg["tokens_packed"],
-        mean_utilization=agg["mean_utilization"],
-        oversize_packs=agg["oversize_packs"],
-    )
-    stats["sec_pack"] = round(_time.time() - t0, 3)
-    t0 = _time.time()
-
-    holdout.write.mode("overwrite").parquet(f"{output_dir}/holdout")
-    mixed.write.mode("overwrite").parquet(f"{output_dir}/mixed")
-    packs.write.mode("overwrite").parquet(f"{output_dir}/packs")
-    stats["sec_write"] = round(_time.time() - t0, 3)
+    _, more = _run_stages(mixed, [
+        ("pack", pack, [
+            _rows("packs"),
+            _total(F.col("total_tokens"), "tokens_packed"),
+            F.round(
+                F.avg(F.when(~F.col("oversize"), F.col("utilization"))), 6
+            ).alias("mean_utilization"),
+            _total(F.col("oversize").cast("int"), "oversize_packs"),
+        ], None),
+        ("write", lambda packs: packs, [], f"{output_dir}/packs"),
+        ("write", lambda _: holdout, [], f"{output_dir}/holdout"),
+        ("write", lambda _: mixed, [], f"{output_dir}/mixed"),
+    ])
+    stats.update(more)
     return stats
 
 

@@ -216,24 +216,6 @@ GROUP BY p_type
 """
 
 
-def q_semijoin_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS / left-semi join (orders with any late-shipped lineitem).
-    Function retained for direct use; registry-merged into
-    q_setops_priority_customers (r5) — the semi-join shape is driver-
-    checked there as the 'semijoin_late' branch."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        o.join(
-            li,
-            (o.o_orderkey == li.l_orderkey) & (li.l_shipdate > o.o_orderdate),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-
-
 def q_window_running_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-function checklist row, one query per grain (rule-16 cap):
     cumulative sum (decimal-exact), row_number, lag-based inter-event
@@ -471,81 +453,14 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
 FROM raw_docs
 """
 
-
-def x2_span_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2: media-vs-layout span classification. Function retained for
-    direct use; registry-merged into x1_grounding_scan (r5) — the
-    driver-checked columns are x1's n_media/n_layout."""
-    df = _raw(spark, sf_dir)
-    n_media = F.size(F.regexp_extract_all("raw", F.lit(MEDIA_PAT), 0)).cast("bigint")
-    n_total = F.size(F.regexp_extract_all("raw", F.lit(REF_PAT), 0)).cast("bigint")
-    return df.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        n_media.alias("n_media"),
-        (n_total - n_media).alias("n_layout"),
-    )
-
-
-def x3_det_parse_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3: safe det-payload parse; malformed payloads are counted, not
-    fatal (error-swallowing semantics of run_dpsk_ocr_pdf.py:138-148)."""
-    df = _raw(spark, sf_dir)
-    dets = F.regexp_extract_all("raw", F.lit(REF_PAT), 2)
-    bad = F.filter(dets, lambda d: ~d.rlike(DET_OK_PAT))
-    return df.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.size(dets).cast("bigint").alias("n_det"),
-        F.size(bad).cast("bigint").alias("parse_failures"),
-    )
-
-
-SQL_X3 = f"""
-WITH {RAW_DOCS_CTE}
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-  CAST(len(regexp_extract_all(raw, '{REF_PAT}', 2)) AS BIGINT) AS n_det,
-  CAST(len(list_filter(regexp_extract_all(raw, '{REF_PAT}', 2),
-       d -> NOT regexp_matches(d, '{DET_OK_PAT}'))) AS BIGINT) AS parse_failures
-FROM raw_docs
-"""
-
 _BOX_PAT = r"<\|det\|>\[\[(\d+),(\d+),(\d+),(\d+)\]\]<\|/det\|>"
-
-
-def x4_coord_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4: 0–999 virtual grid → pixel space, int(x/999*W) at W=1280,H=1810
-    (run_dpsk_ocr_pdf.py:175-181)."""
-    df = _raw(spark, sf_dir)
-
-    def px(g: int, dim: int):
-        v = F.nullif(F.regexp_extract("raw", _BOX_PAT, g), F.lit("")).cast("bigint")
-        return F.floor(v / 999 * dim).cast("bigint")
-
-    return df.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        px(1, 1280).alias("px1"),
-        px(2, 1810).alias("py1"),
-        px(3, 1280).alias("px2"),
-        px(4, 1810).alias("py2"),
-    )
-
-
-SQL_X4 = f"""
-WITH {RAW_DOCS_CTE}
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-  CAST(FLOOR(CAST(NULLIF(regexp_extract(raw, '{_BOX_PAT}', 1), '') AS BIGINT) / 999.0 * 1280) AS BIGINT) AS px1,
-  CAST(FLOOR(CAST(NULLIF(regexp_extract(raw, '{_BOX_PAT}', 2), '') AS BIGINT) / 999.0 * 1810) AS BIGINT) AS py1,
-  CAST(FLOOR(CAST(NULLIF(regexp_extract(raw, '{_BOX_PAT}', 3), '') AS BIGINT) / 999.0 * 1280) AS BIGINT) AS px2,
-  CAST(FLOOR(CAST(NULLIF(regexp_extract(raw, '{_BOX_PAT}', 4), '') AS BIGINT) / 999.0 * 1810) AS BIGINT) AS py2
-FROM raw_docs
-"""
 
 
 def x3_det_parse_rescale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+X4 merged registry entry (same doc grain; the 50-entry cap of
     rule 16 — merged round 4 to free a slot for d6_dup_clusters): safe
     det-payload parse check PLUS first-box 0–999→pixel rescale in one
-    projection. x3/x4 remain as standalone library functions + SQL,
-    covered through this superset. Sort-key note (scan_null_ties):
+    projection. Sort-key note (scan_null_ties):
     doc_id is unique, so the nullable px/py columns never decide a tie."""
     df = _raw(spark, sf_dir)
     dets = F.regexp_extract_all("raw", F.lit(REF_PAT), 2)
@@ -1331,24 +1246,6 @@ SELECT md5(substr(text, 1, 40)) AS dup_key,
   CAST(MIN(doc_id) AS BIGINT) AS canonical_doc
 FROM documents GROUP BY 1 HAVING COUNT(*) > 1
 """
-
-
-def e1_embedding_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array math: L2 norm via sequential double fold (F.aggregate —
-    stays in codegen, no UDF). Function retained for direct use;
-    registry-merged into s1_knn_bruteforce (r5) — the fold is driver-
-    checked there as the neighbor_l2 column."""
-    df = _t(spark, sf_dir, "embeddings")
-    sq = F.aggregate(
-        "embedding",
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    return df.select(
-        F.col("vec_id").cast("bigint").alias("vec_id"),
-        F.round(F.sqrt(sq), 6).alias("l2_norm"),
-        F.col("label").cast("bigint").alias("label"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -8,10 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
-    FloatType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -76,59 +73,5 @@ PAGES_SCHEMA = StructType(
         StructField("doc_id", StringType(), False),
         StructField("page_no", IntegerType(), False),
         StructField("content", StringType(), True),
-    ]
-)
-
-# Layout-block table for XY-cut reading-order recovery (SURVEY §7.4).
-BLOCKS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("page_no", IntegerType(), False),
-        StructField("block_id", IntegerType(), False),
-        StructField("x1", IntegerType(), True),
-        StructField("y1", IntegerType(), True),
-        StructField("x2", IntegerType(), True),
-        StructField("y2", IntegerType(), True),
-        StructField("font_size", FloatType(), True),
-        StructField("text", StringType(), True),
-    ]
-)
-
-# Flattened DOM-node table for boilerplate classification (north_star).
-DOM_NODES_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("node_id", IntegerType(), False),
-        StructField("tag", StringType(), True),
-        StructField("text", StringType(), True),
-        StructField("n_chars", IntegerType(), True),
-        StructField("n_link_chars", IntegerType(), True),
-        StructField("n_tags", IntegerType(), True),
-    ]
-)
-
-# Multimodal media table: opaque binary + typed metadata (task brief).
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_ref", StringType(), False),
-        StructField("doc_id", StringType(), False),
-        StructField("mime", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("data", StringType(), True),  # hex payload stand-in; binary at scale
-    ]
-)
-
-METRICS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("pages_in", IntegerType(), True),
-        StructField("pages_kept", IntegerType(), True),
-        StructField("blocks_kept", IntegerType(), True),
-        StructField("blocks_dropped", IntegerType(), True),
-        StructField("parse_failures", IntegerType(), True),
-        StructField("char_yield", LongType(), True),
-        StructField("media_spans", IntegerType(), True),
     ]
 )

@@ -346,3 +346,95 @@ def test_dedup_job_survives_empty_store_dirs(spark):
         assert s["accepted"] == 6 and s["store_total"] == 6
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_curate_and_prep_stats_match_written_outputs(spark):
+    """The counts each job reports are observed on the Spark job that
+    materialises the stage, not recounted afterwards: they must equal a
+    recount of what the jobs wrote."""
+    from pyspark.sql import functions as F
+
+    base = tempfile.mkdtemp(prefix="curate_recount_")
+    try:
+        rows = [
+            (i, " ".join(f"t{i}_{j}" for j in range(40 + i % 7)), "edf"[i % 3])
+            for i in range(120)
+        ]
+        # near-duplicates of the first ten docs (one word changed)
+        rows += [(1000 + i, rows[i][1] + " x", rows[i][2]) for i in range(10)]
+        spark.createDataFrame(
+            rows, "doc_id long, text string, lang string"
+        ).write.parquet(f"{base}/in")
+        cur = jobs.run_curation_job(
+            spark, f"{base}/in", f"{base}/out", keep_cols=("lang",)
+        )
+        corpus = spark.read.parquet(f"{base}/out/corpus")
+        assert cur["docs_in"] == 130
+        assert cur["after_dedup"] < cur["after_repetition_gate"]
+        assert corpus.count() == cur["docs_out"] == cur["after_dedup"]
+        assert cur["tokens_out"] == corpus.select(
+            F.sum(F.size(F.split("text", r"\s+")))
+        ).collect()[0][0]
+
+        tp = jobs.run_training_prep_job(
+            spark, f"{base}/out/corpus", f"{base}/prep", holdout_frac=0.1,
+            seq_budget=200,
+        )
+        packs = spark.read.parquet(f"{base}/prep/packs")
+        assert tp["docs_in"] == cur["docs_out"]
+        for name, key in (("holdout", "holdout_docs"), ("mixed", "mixed_docs")):
+            assert spark.read.parquet(f"{base}/prep/{name}").count() == tp[key]
+        assert packs.count() == tp["packs"]
+        agg = packs.agg(
+            F.sum("total_tokens"), F.sum(F.col("oversize").cast("int"))
+        ).collect()[0]
+        assert agg[0] == tp["tokens_packed"] and agg[1] == tp["oversize_packs"]
+        for k in ("sec_holdout_split", "sec_mix", "sec_pack", "sec_write"):
+            assert k in tp
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_curate_and_prep_on_input_the_gate_empties(spark):
+    """Every doc is a repetition bomb: curation empties at the gate and
+    training prep then runs on an empty corpus. Both finish, and every
+    count and sum reads 0 (an int, not None)."""
+    base = tempfile.mkdtemp(prefix="curate_empty_")
+    try:
+        spark.createDataFrame(
+            [(i, "spam " * 300, "en") for i in range(6)],
+            "doc_id long, text string, lang string",
+        ).write.parquet(f"{base}/in")
+        cur = jobs.run_curation_job(
+            spark, f"{base}/in", f"{base}/out", keep_cols=("lang",)
+        )
+        assert cur["docs_in"] == 6
+        for k in ("after_repetition_gate", "after_dedup", "docs_out", "tokens_out"):
+            assert cur[k] == 0 and isinstance(cur[k], int), (k, cur[k])
+        assert spark.read.parquet(f"{base}/out/corpus").count() == 0
+        tp = jobs.run_training_prep_job(spark, f"{base}/out/corpus", f"{base}/prep")
+        for k in ("docs_in", "holdout_docs", "train_docs", "mixed_docs", "packs",
+                  "tokens_packed", "oversize_packs"):
+            assert tp[k] == 0 and isinstance(tp[k], int), (k, tp[k])
+        assert tp["pack_shards"] == 1
+        assert spark.read.parquet(f"{base}/prep/packs").count() == 0
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_cluster_job_empty_dup_log(spark):
+    """A store whose dup log exists but holds no rows (every slice was
+    accepted whole) reads as all-zero, the same dict as a missing log."""
+    base = tempfile.mkdtemp(prefix="cluster_empty_")
+    try:
+        spark.createDataFrame(
+            [], "doc_id long, dup_of long, dup_in_store boolean"
+        ).write.parquet(f"{base}/dups")
+        assert jobs.run_cluster_job(spark, base) == {
+            "edges": 0,
+            "docs_clustered": 0,
+            "clusters": 0,
+            "max_cluster_size": 0,
+        }
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
